@@ -29,14 +29,11 @@ _FORMULA_SQL_RE = r"\\[a-zA-Z]+|\^\{|_\{|&="
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: segment → classify → dedup → map → join-back → reassemble
     per turn, over sf0.001-derived transcripts."""
-    from docling_translate_spark.operators.extract import (
-        ExtractConfig,
-        extract_turns_fused,
-    )
+    from docling_translate_spark.operators.extract import ExtractConfig, extract_turns
     from docling_translate_spark.sources.tables import transcripts_from_documents
 
     transcripts = transcripts_from_documents(spark, "/root/testdata/sf0.001")
-    return extract_turns_fused(transcripts, ExtractConfig(ordered=True))
+    return extract_turns(transcripts, ExtractConfig(ordered=True))
 
 
 # ---------------------------------------------------------------------------
@@ -729,10 +726,9 @@ def _sanitized_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_a6_extraction_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A6 per-conversation rollup of the real extraction pipeline output
-    (segment counts, content counts, boilerplate ratio), driven through
-    the RELATIONAL extraction variant over sanitized single-paragraph
-    turns — extraction is byte-identity there, so the rollup carries a
-    full value oracle (r3 verdict #3; was rows-only)."""
+    (segment counts, content counts, boilerplate ratio) over sanitized
+    single-paragraph turns — extraction is byte-identity there, so the
+    rollup carries a full value oracle (r3 verdict #3; was rows-only)."""
     from docling_translate_spark.operators.extract import extract_turns
 
     out = extract_turns(_sanitized_turns(spark, sf_dir))
@@ -744,17 +740,14 @@ def q_a6_extraction_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_extract_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Flagship FUSED extraction over sanitized single-paragraph turns —
+    """Flagship extraction over sanitized single-paragraph turns —
     byte-identity there, so this carries a full value oracle (r3
     verdict #3; was rows-only). Rich-text segmentation semantics stay
     pinned by the pytest golden fixtures and the live-reference parity
     suite (tests/test_reference_parity.py)."""
-    from docling_translate_spark.operators.extract import (
-        ExtractConfig,
-        extract_turns_fused,
-    )
+    from docling_translate_spark.operators.extract import ExtractConfig, extract_turns
 
-    out = extract_turns_fused(
+    out = extract_turns(
         _sanitized_turns(spark, sf_dir), ExtractConfig(ordered=True)
     )
     return out.select(
@@ -2007,12 +2000,12 @@ def q_s7_render_document(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_s28_table_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.8 UNION ALL of span sources: body + caption + table cells +
-    headers through the REAL fused extraction kernel (ref core.py:429-448).
+    headers through the REAL extraction kernel (ref core.py:429-448).
     Full DuckDB oracle: the body is sanitized to a guaranteed single
     plaintext paragraph, so the kernel's output is exactly
     body ∥ caption ∥ cells ∥ headers joined with the content joiner —
     SQL-expressible even though the kernel itself is not."""
-    from docling_translate_spark.operators.extract import extract_turns_fused
+    from docling_translate_spark.operators.extract import extract_turns
 
     body = F.trim(
         F.concat(
@@ -2052,7 +2045,7 @@ def q_s28_table_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("cells"),
         F.when(has_tbl, F.array(F.lit("metric"), F.lit("value"))).alias("headers"),
     )
-    return extract_turns_fused(rich).select(
+    return extract_turns(rich).select(
         "conv_id", "turn_idx", "extracted_text", "n_spans"
     )
 
@@ -2651,7 +2644,7 @@ def q_statfmt_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     gate slot (tagged union, scan_battery precedent) — the last two
     SURVEY §2 rows that had driver coverage only through pytest.
 
-    Branch 'stat' runs :func:`metrics.stat_records` over the FUSED
+    Branch 'stat' runs :func:`metrics.stat_records` over the
     extraction of sanitized single-paragraph turns (byte-identity
     there, the extract_turns discipline) — one row per run metric
     (turns / spans / chars), the reference's benchmark-stats rollup
@@ -2664,13 +2657,10 @@ def q_statfmt_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the formatted string itself is hashed, so a separate length would
     only re-test engine length semantics)."""
     from docling_translate_spark.functions.render import format_formula_col
-    from docling_translate_spark.operators.extract import (
-        ExtractConfig,
-        extract_turns_fused,
-    )
+    from docling_translate_spark.operators.extract import ExtractConfig, extract_turns
     from docling_translate_spark.operators.metrics import stat_records
 
-    ext = extract_turns_fused(
+    ext = extract_turns(
         _sanitized_turns(spark, sf_dir), ExtractConfig(ordered=True)
     )
     stats = stat_records(ext).select(
@@ -2699,7 +2689,7 @@ def q_statfmt_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_toggles_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S6 enrichment-toggle matrix as ONE gate slot — four full
+    """S6 enrichment-toggle matrix as ONE gate slot — three full
     extraction runs over sanitized single-paragraph turns (byte-identity
     there, the extract_turns discipline), each under a different
     ``ExtractConfig``, unioned with a branch tag so every toggle's
@@ -2715,38 +2705,23 @@ def q_toggles_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     - ``sent``: ``sentence_split=True`` on single-sentence bodies —
       the sentence pipeline (tokenize → per-sentence map → ' ' rejoin)
       must reproduce the input byte-for-byte, value-checking that the
-      split/rejoin path corrupts nothing;
-    - ``gmark``: the marker engine under ``dedup_scope='global'``,
-      driven through the RELATIONAL ``extract_turns`` variant (the
-      fused kernel is batch-scope by design, so only the relational
-      plan carries the corpus-wide distinct + sha2-keyed broadcast
-      join-back) — it must emit exactly the same rows as the in-batch
-      variant (dedup scope is an optimization choice, never a
-      semantics choice)."""
-    from docling_translate_spark.operators.extract import (
-        ExtractConfig,
-        extract_turns,
-        extract_turns_fused,
-    )
+      split/rejoin path corrupts nothing."""
+    from docling_translate_spark.operators.extract import ExtractConfig, extract_turns
 
     turns = _sanitized_turns(spark, sf_dir)
     branches = {
-        "marker": (extract_turns_fused, ExtractConfig(engine="marker")),
-        "trunc": (extract_turns_fused, ExtractConfig(engine="truncate512")),
-        "sent": (extract_turns_fused, ExtractConfig(sentence_split=True)),
-        "gmark": (
-            extract_turns,
-            ExtractConfig(engine="marker", dedup_scope="global"),
-        ),
+        "marker": ExtractConfig(engine="marker"),
+        "trunc": ExtractConfig(engine="truncate512"),
+        "sent": ExtractConfig(sentence_split=True),
     }
     outs = [
-        fn(turns, cfg).select(
+        extract_turns(turns, cfg).select(
             F.lit(name).alias("branch"),
             "conv_id",
             "turn_idx",
             F.col("extracted_text").alias("out"),
         )
-        for name, (fn, cfg) in branches.items()
+        for name, cfg in branches.items()
     ]
     res = outs[0]
     for o in outs[1:]:
@@ -4285,9 +4260,6 @@ w AS MATERIALIZED (
             FROM ex
             UNION ALL
             SELECT 'sent', conv_id, turn_idx, san FROM ex
-            UNION ALL
-            SELECT 'gmark', conv_id, turn_idx, '<<' || san || '>>'
-            FROM ex
         """,
         "statfmt_battery": rf"""
             WITH ex AS (

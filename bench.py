@@ -58,14 +58,9 @@ def _build(cores: int):
 
 
 def _extract(spark, path: str):
-    from docling_translate_spark.operators.extract import (
-        ExtractConfig,
-        extract_turns_fused,
-    )
+    from docling_translate_spark.operators.extract import ExtractConfig, extract_turns
 
-    # fused zero-shuffle plan — the production-scale physical plan
-    # (see extract.py scale notes; byte-equal to the relational plan).
-    return extract_turns_fused(spark.read.parquet(path), ExtractConfig())
+    return extract_turns(spark.read.parquet(path), ExtractConfig())
 
 
 def _worker(cores: int, path: str, n_timed: int = 2) -> None:

@@ -5,10 +5,9 @@ a time the way the reference walks one document at a time
 (``src/core.py:324-536``). Tests assert the Spark pipeline equals this
 byte-for-byte under ``(conv_id, turn_idx)`` ordering.
 
-The classification here reuses the *pure* predicates
-(:mod:`docling_translate_spark.classify`), while the Spark pipeline uses
-independent JVM column expressions — so the test cross-checks two separate
-implementations of the same rules.
+The oracle shares the kernels (segmenters, classify predicates, map
+engines) with the Spark plan but none of its batching, dedup, lookup or
+reassembly — those are what it checks.
 """
 
 from __future__ import annotations
@@ -41,8 +40,17 @@ def extract_turn(
     tool: Optional[str],
     engine: str = "identity",
     sentence_split: bool = False,
+    *,
+    caption: Optional[str] = None,
+    cells: Optional[List[List[Optional[str]]]] = None,
+    headers: Optional[List[Optional[str]]] = None,
 ) -> Dict:
-    """Expected pipeline output for one turn."""
+    """Expected pipeline output for one turn.
+
+    ``caption``/``cells``/``headers`` are the rich-transcript span
+    sources: pooled WHOLE after the body spans — no sentence split, no
+    formula/boilerplate pass (ref core.py:429-448)."""
+    from docling_translate_spark.operators.segment import aux_span_texts
     from docling_translate_spark.sentences import split_sentences
 
     fn = create_engine(engine)
@@ -69,6 +77,9 @@ def extract_turn(
                     )
                 else:
                     content.append(fn(pd.Series([seg_text])).iloc[0])
+    for seg_type, aux_text in aux_span_texts(caption, cells, headers):
+        spans.append((-1, -1, seg_type, True, -1))
+        content.append(fn(pd.Series([aux_text])).iloc[0])
     return {
         "extracted_text": CONTENT_JOINER.join(content),
         "spans": spans,

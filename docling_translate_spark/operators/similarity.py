@@ -548,6 +548,10 @@ def lsh_ann_topk(
             for members in pdf["_members"]:
                 if len(members) < 2:
                     continue
+                # collect_list order depends on the partitioning; stacking
+                # in sid order keeps tied cosines (and so the id
+                # tie-break) the same at any cluster size
+                members = sorted(members, key=lambda m: m["sid"])
                 ids = np.asarray([m["sid"] for m in members], dtype=np.int64)
                 mat = np.stack(
                     [np.asarray(m["_v"], dtype=np.float64) for m in members]

@@ -25,10 +25,7 @@ from docling_translate_spark.operators.dedup import (
     connected_components,
     minhash_lsh_pairs,
 )
-from docling_translate_spark.operators.extract import (
-    ExtractConfig,
-    extract_turns_fused,
-)
+from docling_translate_spark.operators.extract import ExtractConfig, extract_turns
 from docling_translate_spark.operators.text_analysis import (
     fingerprint,
     lang_id,
@@ -117,7 +114,7 @@ def curate_turns(
             .alias("text"),
         )
 
-    ext = extract_turns_fused(transcripts, cfg.extract)
+    ext = extract_turns(transcripts, cfg.extract)
     docs = ext.filter(F.length("extracted_text") >= cfg.min_chars).withColumn(
         "text", F.col("extracted_text")
     )

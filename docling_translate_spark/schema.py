@@ -49,23 +49,14 @@ RICH_TRANSCRIPT_SCHEMA = StructType(
 # One span: the reference TextSegment record plus the boilerplate/formula
 # labels our classifier adds (reference src/text_parser.py:28-46,
 # src/html_generator.py:20-45 and :617-619).
-SPAN_FIELDS = [
-    StructField("text", StringType(), True),
-    StructField("start_pos", IntegerType(), False),
-    StructField("end_pos", IntegerType(), False),
-    StructField("translatable", BooleanType(), False),
-    StructField("segment_type", StringType(), False),
-    StructField("line_number", IntegerType(), False),
-]
-SPAN_SCHEMA = StructType(SPAN_FIELDS)
-
-# Exploded segment row: one row per span per turn (post-segmentation).
-SEGMENT_ROW_SCHEMA = StructType(
+SPAN_SCHEMA = StructType(
     [
-        StructField("conv_id", StringType(), False),
-        StructField("turn_idx", IntegerType(), False),
-        StructField("span_idx", IntegerType(), False),
-        *SPAN_FIELDS,
+        StructField("text", StringType(), True),
+        StructField("start_pos", IntegerType(), False),
+        StructField("end_pos", IntegerType(), False),
+        StructField("translatable", BooleanType(), False),
+        StructField("segment_type", StringType(), False),
+        StructField("line_number", IntegerType(), False),
     ]
 )
 

@@ -3,7 +3,7 @@
 These are plain ``str -> list[tuple]`` functions so they can be (a) unit
 tested directly against hand-written fixtures and (b) executed vectorized
 inside an Arrow-batched ``mapInPandas`` operator
-(:mod:`docling_translate_spark.operators.segment`).
+(:mod:`docling_translate_spark.operators.extract`).
 
 Semantics are pinned to the reference implementation's observable behavior
 (reference ``src/text_parser.py``, studied — not copied):

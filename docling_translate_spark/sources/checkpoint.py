@@ -16,6 +16,10 @@ snapshot log; in-sandbox the same semantics are emulated with parquet:
   — write-then-commit ordering makes the pipeline idempotent, exactly the
   guarantee an Iceberg snapshot commit gives atomically.
 
+Each unit is extracted ONCE: its lineage metrics are observed
+(``DataFrame.observe``) on the very DataFrame being written, so the
+commit row costs no second pass over the unit.
+
 Skew note: hash-bucketing by conv_id spreads hot conversations' *units*
 evenly; within a unit the extraction pipeline itself needs no salting
 (see extract.py scale notes).
@@ -23,11 +27,13 @@ evenly; within a unit the extraction pipeline itself needs no salting
 
 from __future__ import annotations
 
-from typing import Iterable
+from datetime import datetime
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from docling_translate_spark.operators.extract import ExtractConfig, extract_turns
+from docling_translate_spark.schema import LINEAGE_SCHEMA
 
 
 class SimulatedFailure(RuntimeError):
@@ -39,11 +45,18 @@ def unit_col(n_units: int):
 
 
 def committed_units(spark: SparkSession, ckpt_dir: str, run_id: str) -> set[int]:
-    """Units already committed for this run (empty if no checkpoint yet)."""
+    """Units already committed for this run (empty if no checkpoint yet).
+
+    Only a checkpoint that does not exist yet — no path, or a directory
+    holding no committed data file — means "nothing committed". Any other
+    read failure (a corrupt file, a permission error) raises: silently
+    reprocessing every unit would hide it."""
     try:
         ckpt = spark.read.parquet(ckpt_dir)
-    except Exception:
-        return set()
+    except AnalysisException as e:
+        if e.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+            return set()
+        raise
     rows = (
         ckpt.filter(F.col("run_id") == run_id)
         .select("partition_id")
@@ -83,29 +96,37 @@ def run_extraction(
     for i, u in enumerate(todo):
         if fail_after_units is not None and i >= fail_after_units:
             raise SimulatedFailure(f"simulated crash before unit {u}")
-        out = extract_turns(tagged.filter(F.col("unit") == u), config).withColumn(
-            "unit", F.lit(u)
+        obs = Observation()
+        out = (
+            extract_turns(tagged.filter(F.col("unit") == u), config)
+            .withColumn("unit", F.lit(u))
+            .observe(
+                obs,
+                F.min("conv_id").alias("conv_id_min"),
+                F.max("conv_id").alias("conv_id_max"),
+                F.count(F.lit(1)).alias("turns_processed"),
+                F.sum("n_spans").cast("long").alias("spans_emitted"),
+                F.avg("boilerplate_ratio").alias("boilerplate_ratio"),
+            )
         )
-        # 1) data write (replaces any torn previous attempt of this unit)
+        # 1) data write (replaces any torn previous attempt of this unit);
+        #    the same pass fills the observed metrics
         out.write.partitionBy("unit").mode("overwrite").parquet(out_dir)
+        m = obs.get
         # 2) lineage/metrics commit — unit becomes durable only here
-        metrics = out.agg(
-            F.min("conv_id").alias("conv_id_min"),
-            F.max("conv_id").alias("conv_id_max"),
-            F.count("*").alias("turns_processed"),
-            F.sum("n_spans").cast("long").alias("spans_emitted"),
-            F.avg("boilerplate_ratio").alias("boilerplate_ratio"),
-        ).select(
-            F.lit(run_id).alias("run_id"),
-            F.lit(u).cast("int").alias("partition_id"),
-            "conv_id_min",
-            "conv_id_max",
-            F.coalesce("turns_processed", F.lit(0)).alias("turns_processed"),
-            F.coalesce("spans_emitted", F.lit(0)).alias("spans_emitted"),
-            "boilerplate_ratio",
-            F.current_timestamp().alias("committed_ts"),
+        lineage = (
+            run_id,
+            u,
+            m["conv_id_min"],
+            m["conv_id_max"],
+            m["turns_processed"] or 0,
+            m["spans_emitted"] or 0,
+            m["boilerplate_ratio"],
+            datetime.now(),
         )
-        metrics.write.mode("append").parquet(ckpt_dir)
+        spark.createDataFrame([lineage], LINEAGE_SCHEMA).write.mode("append").parquet(
+            ckpt_dir
+        )
         processed.add(u)
     return processed
 

@@ -18,10 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from docling_translate_spark.operators.extract import (
-    ExtractConfig,
-    extract_turns_fused,
-)
+from docling_translate_spark.operators.extract import ExtractConfig, extract_turns
 from docling_translate_spark.schema import TRANSCRIPT_SCHEMA
 
 
@@ -50,7 +47,7 @@ def read_transcript_stream(
 def stream_extract(stream: DataFrame, config: ExtractConfig | None = None) -> DataFrame:
     """Per-turn extraction on a stream — stateless mapInPandas, so any
     output mode works and no watermark is required."""
-    return extract_turns_fused(stream, config)
+    return extract_turns(stream, config)
 
 
 def stream_dedup(stream: DataFrame, within: str = "10 minutes") -> DataFrame:

@@ -1,13 +1,17 @@
 """Checkpoint / lineage / resume semantics (FIXTURES.md §3):
 crash mid-run, rerun, assert no duplicate (conv_id, turn_idx) rows and
-full parity with an uncheckpointed run."""
+full parity with the driver-side golden oracle; lineage rows equal what
+their unit wrote; an unreadable checkpoint fails loudly."""
 
+import math
+import os
 import tempfile
 
 import pytest
 
 from pyspark.sql import functions as F
 
+from docling_translate_spark.golden import extract_turn
 from docling_translate_spark.operators.extract import extract_turns
 from docling_translate_spark.operators.metrics import conversation_rollup, stat_records
 from docling_translate_spark.schema import TRANSCRIPT_SCHEMA
@@ -44,15 +48,23 @@ def test_resume_after_crash(spark, transcripts):
     assert done == {2, 3}
     assert committed_units(spark, ckpt_dir, "r1") == {0, 1, 2, 3}
 
-    out = read_output(spark, out_dir)
+    out = read_output(spark, out_dir).collect()
+    n = len(out)
     # idempotency: no duplicate turns
-    n = out.count()
-    assert out.select("conv_id", "turn_idx").distinct().count() == n
-    # parity with a direct uncheckpointed run
-    direct = extract_turns(transcripts)
-    assert n == direct.count()
-    diff = out.drop("unit").exceptAll(direct).count()
-    assert diff == 0
+    assert len({(r["conv_id"], r["turn_idx"]) for r in out}) == n
+    # parity with the driver-side golden oracle, turn by turn
+    inputs = transcripts.collect()
+    assert n == len(inputs)
+    got = {(r["conv_id"], r["turn_idx"]): r for r in out}
+    for t in inputs:
+        exp = extract_turn(t["text"], t["tool"])
+        row = got[(t["conv_id"], t["turn_idx"])]
+        assert row["extracted_text"] == exp["extracted_text"]
+        assert [tuple(s) for s in row["spans"]] == exp["spans"]
+        assert row["n_spans"] == exp["n_spans"]
+        assert math.isclose(
+            row["boilerplate_ratio"], exp["boilerplate_ratio"], abs_tol=1e-12
+        )
 
     # lineage rows: one per unit with sane metrics
     lin = read_lineage(spark, ckpt_dir).collect()
@@ -68,6 +80,54 @@ def test_rerun_noop(spark, transcripts):
     assert first == {0, 1, 2}
     again = run_extraction(spark, transcripts, out_dir, ckpt_dir, "r1", n_units=3)
     assert again == set()  # fully committed → nothing to do
+
+
+def test_lineage_equals_unit_output(spark):
+    """Each lineage row holds exactly what its unit wrote: turns_processed
+    is the unit's row count and spans_emitted its sum(n_spans). With more
+    units than conversations some unit receives nothing and still commits
+    a zero row."""
+    df = spark.createDataFrame(gen_rows(3, 4), TRANSCRIPT_SCHEMA)
+    tmp = tempfile.mkdtemp(prefix="dts-ckpt3-")
+    out_dir, ckpt_dir = f"{tmp}/out", f"{tmp}/ckpt"
+    n_units = 8
+    assert run_extraction(spark, df, out_dir, ckpt_dir, "r1", n_units=n_units) == set(
+        range(n_units)
+    )
+    written = {
+        r["unit"]: (r["n"], r["s"])
+        for r in read_output(spark, out_dir)
+        .groupBy("unit")
+        .agg(F.count("*").alias("n"), F.sum("n_spans").alias("s"))
+        .collect()
+    }
+    lin = {r["partition_id"]: r for r in read_lineage(spark, ckpt_dir).collect()}
+    assert set(lin) == set(range(n_units))
+    assert len(written) < n_units  # at least one empty unit
+    for u, r in lin.items():
+        n, s = written.get(u, (0, 0))
+        assert (r["turns_processed"], r["spans_emitted"]) == (n, s), u
+    assert sum(r["turns_processed"] for r in lin.values()) == df.count()
+
+
+def test_corrupt_checkpoint_raises(spark, transcripts):
+    """A checkpoint that exists but cannot be read must fail the job, not
+    silently reprocess every unit."""
+    tmp = tempfile.mkdtemp(prefix="dts-ckpt4-")
+    ckpt_dir = f"{tmp}/ckpt"
+    os.makedirs(ckpt_dir)
+    with open(f"{ckpt_dir}/part-00000.parquet", "wb") as f:
+        f.write(b"not a parquet file")
+    with pytest.raises(Exception, match="parquet|Parquet|footer"):
+        run_extraction(spark, transcripts, f"{tmp}/out", ckpt_dir, "r1", n_units=2)
+    assert not os.path.exists(f"{tmp}/out")
+
+
+def test_missing_checkpoint_is_empty(spark):
+    tmp = tempfile.mkdtemp(prefix="dts-ckpt5-")
+    assert committed_units(spark, f"{tmp}/absent", "r1") == set()
+    os.makedirs(f"{tmp}/torn/_temporary")  # crash during the first append
+    assert committed_units(spark, f"{tmp}/torn", "r1") == set()
 
 
 def test_conversation_rollup_salted(spark, transcripts):

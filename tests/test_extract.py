@@ -61,50 +61,11 @@ def test_extract_matches_golden_marker(spark, small_transcripts):
     _assert_matches(out, golden, "marker")
 
 
-def test_global_dedup_same_result(spark, small_transcripts):
-    """'global' dedup scope (distinct + broadcast join-back) must match."""
-    rows = small_transcripts.collect()
-    golden = _golden_map(rows)
-    out = extract_turns(
-        small_transcripts, ExtractConfig(dedup_scope="global", ordered=True)
-    ).collect()
-    _assert_matches(out, golden, "identity-global")
-
-
-def test_global_shuffle_join_same_result(spark, small_transcripts):
-    """'global' scope with shuffle join-back must match too."""
-    rows = small_transcripts.collect()
-    golden = _golden_map(rows)
-    out = extract_turns(
-        small_transcripts,
-        ExtractConfig(dedup_scope="global", broadcast_map=False, ordered=True),
-    ).collect()
-    _assert_matches(out, golden, "identity-global-shuffle")
-
-
-def test_fused_matches_relational(spark, small_transcripts):
-    """The zero-shuffle fused plan must be byte-identical to the
-    relational plan (and hence to the golden oracle)."""
-    from docling_translate_spark.operators.extract import extract_turns_fused
-
-    rows = small_transcripts.collect()
-    golden = _golden_map(rows)
-    out = extract_turns_fused(
-        small_transcripts, ExtractConfig(ordered=True)
-    ).collect()
-    keys = [(r["conv_id"], r["turn_idx"]) for r in out]
-    assert keys == sorted(keys)
-    _assert_matches(out, golden, "fused")
-
-
 def test_fused_marker_engine(spark, small_transcripts):
-    from docling_translate_spark.operators.extract import extract_turns_fused
-
+    """Same contract without the range sort: the bare narrow plan."""
     rows = small_transcripts.collect()
     golden = _golden_map(rows, engine="marker")
-    out = extract_turns_fused(
-        small_transcripts, ExtractConfig(engine="marker", ordered=True)
-    ).collect()
+    out = extract_turns(small_transcripts, ExtractConfig(engine="marker")).collect()
     _assert_matches(out, golden, "fused-marker")
 
 
@@ -112,37 +73,13 @@ def test_fused_sentence_split(spark, small_transcripts):
     """Sentence-level map units: tokenize → dedup → map → ' ' rejoin,
     the reference's html path (core.py:428). Marker engine makes each
     sentence boundary visible."""
-    from docling_translate_spark.operators.extract import extract_turns_fused
-
     rows = small_transcripts.collect()
     golden = _golden_map(rows, engine="marker", sentence_split=True)
-    out = extract_turns_fused(
+    out = extract_turns(
         small_transcripts,
         ExtractConfig(engine="marker", sentence_split=True, ordered=True),
     ).collect()
     _assert_matches(out, golden, "fused-sentences")
-
-
-def test_relational_sentence_split(spark, small_transcripts):
-    """Relational plan's posexplode + two-level aggregation sentence path
-    must match the golden oracle (and hence the fused plan)."""
-    rows = small_transcripts.collect()
-    golden = _golden_map(rows, engine="marker", sentence_split=True)
-    out = extract_turns(
-        small_transcripts,
-        ExtractConfig(engine="marker", sentence_split=True, ordered=True),
-    ).collect()
-    _assert_matches(out, golden, "relational-sentences")
-
-
-def test_relational_sentence_split_global(spark, small_transcripts):
-    rows = small_transcripts.collect()
-    golden = _golden_map(rows, sentence_split=True)
-    out = extract_turns(
-        small_transcripts,
-        ExtractConfig(sentence_split=True, dedup_scope="global", ordered=True),
-    ).collect()
-    _assert_matches(out, golden, "relational-sentences-global")
 
 
 def test_distributed_generator_matches_local(spark):

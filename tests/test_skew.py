@@ -8,7 +8,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from docling_translate_spark.operators.extract import ExtractConfig, extract_turns_fused
+from docling_translate_spark.operators.extract import ExtractConfig, extract_turns
 from docling_translate_spark.operators.metrics import conversation_rollup
 from docling_translate_spark.schema import TRANSCRIPT_SCHEMA
 from docling_translate_spark.synth import gen_turn
@@ -36,7 +36,7 @@ def test_hot_conversation_extraction_and_rollup(spark, hot_transcripts):
     """End-to-end over the skewed table: extraction preserves per-turn
     parity and the salted rollup aggregates the hot key correctly."""
     src = hot_transcripts.repartitionByRange(8, "conv_id", "turn_idx")
-    ext = extract_turns_fused(src, ExtractConfig()).cache()
+    ext = extract_turns(src, ExtractConfig()).cache()
     assert ext.count() == hot_transcripts.count()
     rolled = {r["conv_id"]: r for r in conversation_rollup(ext, salt_buckets=8).collect()}
     assert rolled["conv-hot"]["n_turns"] == 4000

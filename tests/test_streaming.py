@@ -5,7 +5,7 @@ import tempfile
 
 import pytest
 
-from docling_translate_spark.operators.extract import extract_turns_fused
+from docling_translate_spark.operators.extract import extract_turns
 from docling_translate_spark.schema import TRANSCRIPT_SCHEMA
 from docling_translate_spark.streaming.extract_stream import (
     read_transcript_stream,
@@ -42,7 +42,7 @@ def test_stream_extract_matches_batch(spark, transcript_dir):
     }
     batch = {
         (r["conv_id"], r["turn_idx"]): r["extracted_text"]
-        for r in extract_turns_fused(spark.read.parquet(src)).collect()
+        for r in extract_turns(spark.read.parquet(src)).collect()
     }
     assert got == batch
 
@@ -132,7 +132,7 @@ def test_stream_extract_rich_schema_matches_batch(spark):
     }
     batch = {
         (r["conv_id"], r["turn_idx"]): (r["extracted_text"], r["n_spans"])
-        for r in extract_turns_fused(spark.read.parquet(tmp + "/in")).collect()
+        for r in extract_turns(spark.read.parquet(tmp + "/in")).collect()
     }
     assert got == batch
     assert got[("c1", 1)][1] == 1  # caption-only turn carries one span

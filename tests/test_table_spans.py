@@ -1,17 +1,16 @@
 """§2.8 UNION ALL span sources: caption + table-cell + header spans
 (ref src/core.py:429-448). Collection order parity vs the reference's
-pandas flatten, fused/relational byte-equality, classify exemption, and
+pandas flatten, plan-vs-golden byte-equality, classify exemption, and
 plain-schema degradation."""
+
+import math
 
 import pandas as pd
 import pytest
 
-from docling_translate_spark.operators.extract import (
-    ExtractConfig,
-    extract_turns,
-    extract_turns_fused,
-)
-from docling_translate_spark.operators.segment import aux_span_texts, segment_turns
+from docling_translate_spark.golden import extract_turn
+from docling_translate_spark.operators.extract import ExtractConfig, extract_turns
+from docling_translate_spark.operators.segment import aux_span_texts
 from docling_translate_spark.schema import RICH_TRANSCRIPT_SCHEMA
 
 ROWS = [
@@ -53,25 +52,30 @@ def test_aux_order_matches_reference_flatten():
 
 
 def test_segment_rows_carry_aux_spans(spark, rich):
-    segs = segment_turns(rich).collect()
-    by_turn = {}
-    for r in segs:
-        by_turn.setdefault((r["conv_id"], r["turn_idx"]), []).append(r)
-    t0 = sorted(by_turn[("c1", 0)], key=lambda r: r["span_idx"])
-    kinds = [r["segment_type"] for r in t0]
+    """Aux spans follow the body spans in reference order, carry -1
+    positions, stay translatable, and blank entries drop out."""
+    by_turn = {(r["conv_id"], r["turn_idx"]): r for r in extract_turns(rich).collect()}
+    t0 = by_turn[("c1", 0)]
+    spans = t0["spans"]
+    kinds = [s["segment_type"] for s in spans]
     assert kinds[-6:] == ["caption", "table_cell", "table_cell", "table_cell",
                           "table_header", "table_header"]
-    texts = [r["text"] for r in t0[-6:]]
-    assert texts == ["Figure 1: a caption", "a1", "b1", "a2", "colA", "colB"]
-    aux = t0[-1]
-    assert aux["start_pos"] == -1 and aux["end_pos"] == -1
-    assert aux["translatable"] is True
-    # caption-only turn: no sentinel, just the caption span
+    # the blank " " cell is dropped; texts join after the body in order
+    assert t0["extracted_text"].split("\n\n") == [
+        "Plain body paragraph.", "Figure 1: a caption",
+        "a1", "b1", "a2", "colA", "colB",
+    ]
+    for aux in spans[-6:]:
+        assert (aux["start_pos"], aux["end_pos"], aux["line_number"]) == (-1, -1, -1)
+        assert aux["translatable"] is True
+    # caption-only turn: just the caption span
     t1 = by_turn[("c1", 1)]
-    assert len(t1) == 1 and t1[0]["segment_type"] == "caption"
+    assert [s["segment_type"] for s in t1["spans"]] == ["caption"]
+    assert t1["extracted_text"] == "just a caption"
     # blank caption dropped, cell + header survive
-    t3 = sorted(by_turn[("c2", 0)], key=lambda r: r["span_idx"])
-    assert [r["segment_type"] for r in t3] == ["table_cell", "table_header"]
+    t3 = by_turn[("c2", 0)]
+    assert [s["segment_type"] for s in t3["spans"]] == ["table_cell", "table_header"]
+    assert t3["extracted_text"] == "x\n\nh"
 
 
 def test_aux_exempt_from_classification(spark):
@@ -80,7 +84,7 @@ def test_aux_exempt_from_classification(spark):
     rows = [("c", 0, "user", "Body.", None, None, None,
              [["x^{2}", "Page 3 of 40"]], None)]
     df = spark.createDataFrame(rows, SCHEMA)
-    out = extract_turns_fused(df).collect()[0]
+    out = extract_turns(df).collect()[0]
     kinds = [s["segment_type"] for s in out["spans"]]
     assert kinds.count("table_cell") == 2
     assert "formula" not in kinds and "boilerplate" not in kinds
@@ -90,15 +94,24 @@ def test_aux_exempt_from_classification(spark):
 
 @pytest.mark.parametrize("cfg", [
     ExtractConfig(),
-    ExtractConfig(dedup_scope="global"),
     ExtractConfig(sentence_split=True),
     ExtractConfig(engine="marker"),
 ])
-def test_fused_equals_relational_with_aux(spark, rich, cfg):
-    key = lambda r: (r["conv_id"], r["turn_idx"])  # noqa: E731
-    a = sorted(extract_turns_fused(rich, cfg).collect(), key=key)
-    b = sorted(extract_turns(rich, cfg).collect(), key=key)
-    assert [r.asDict() for r in a] == [r.asDict() for r in b]
+def test_plan_equals_golden_with_aux(spark, rich, cfg):
+    got = {(r["conv_id"], r["turn_idx"]): r for r in extract_turns(rich, cfg).collect()}
+    assert len(got) == len(ROWS)
+    for c, t, _, text, tool, _, cap, cel, hdr in ROWS:
+        exp = extract_turn(
+            text, tool, cfg.engine, cfg.sentence_split,
+            caption=cap, cells=cel, headers=hdr,
+        )
+        row = got[(c, t)]
+        assert row["extracted_text"] == exp["extracted_text"], (c, t)
+        assert [tuple(s) for s in row["spans"]] == exp["spans"], (c, t)
+        assert row["n_spans"] == exp["n_spans"], (c, t)
+        assert math.isclose(
+            row["boilerplate_ratio"], exp["boilerplate_ratio"], abs_tol=1e-12
+        ), (c, t)
 
 
 def test_plain_schema_unchanged(spark, rich):
@@ -106,9 +119,9 @@ def test_plain_schema_unchanged(spark, rich):
     exactly (optional columns degrade, never break)."""
     plain = rich.select("conv_id", "turn_idx", "role", "text", "tool", "ts")
     out = {(r["conv_id"], r["turn_idx"]): r for r in
-           extract_turns_fused(plain).collect()}
+           extract_turns(plain).collect()}
     assert out[("c1", 0)]["extracted_text"] == "Plain body paragraph."
     assert out[("c1", 1)]["n_spans"] == 0  # empty body, no aux → sentinel
     rich_out = {(r["conv_id"], r["turn_idx"]): r for r in
-                extract_turns_fused(rich).collect()}
+                extract_turns(rich).collect()}
     assert rich_out[("c1", 2)].asDict() == out[("c1", 2)].asDict()
